@@ -52,18 +52,20 @@ HEADLINE = [
 LOAD_WARN_THRESHOLD = 4.0
 
 
-def _reclaim(spark) -> None:
+def reclaim(spark) -> None:
     """Drop blocks left behind by the previous query's pins.
 
-    Same discipline as ``scripts/selfcheck.py:reclaim`` (round 10):
-    operators pin reused/iterative frames with localCheckpoint or
+    Operators pin reused/iterative frames with localCheckpoint or
     persist, and those blocks free only when the ContextCleaner sees
-    their RDDs garbage-collected on the driver. A 46-query bench in ONE
-    session otherwise accumulates every query's pinned blocks — the
-    committed r10 `knn_pq` row read 34.2 s purely from this pressure
-    (fresh-session re-measure: 4.7 s). One clearCache + Python GC + one
-    JVM GC between queries models a long-lived cluster session's own
-    reclaim cadence, which is the steady state the bench estimates.
+    their RDDs garbage-collected on the driver. A many-query session
+    otherwise accumulates every query's pinned blocks — the committed
+    r10 `knn_pq` row read 34.2 s purely from this pressure (fresh-
+    session re-measure: 4.7 s), and a full sf0.1 oracle sweep OOM'd
+    mid-run once the iterative graph queries (a dozen eager checkpoints
+    each) ran ahead of the heavy LLM queries. One clearCache + Python
+    GC + one JVM GC between queries models a long-lived cluster
+    session's own reclaim cadence. Used by this bench,
+    ``scripts/microbench.py`` and every ``scripts/selfcheck.py`` sweep.
     """
     import gc
 
@@ -230,69 +232,75 @@ def _wait_for_quiet_host(max_wait_sec: float, poll_sec: float = 20.0) -> dict:
     }
 
 
-def main() -> int:
+def bench_target() -> tuple[str, int]:
+    """The sf dir and local core count every timing harness runs at."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    try:
-        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        sf = -1.0
+    return sf_dir, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    load_gate = _wait_for_quiet_host(
-        max_wait_sec=float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT", "600"))
-    )
-    load_before = _host_load()
-    cpu_calib = _cpu_calibration()
+
+def sf_session(app: str, sf_dir: str, cpus: int):
+    """A ``local[cpus]`` session sized to the data in ``sf_dir``.
+
+    Shuffle partitions follow the DATA, not the machine: ~8 MB of
+    compressed parquet (~64 MB in-memory) per reduce task — the same
+    rule a 100 TB deployment applies, which at bench scale stops
+    paying launch overhead for reduce tasks with ~1 MB of input. The
+    floor keeps local[cpus] parallel on tiny inputs; AQE still
+    coalesces below the floor when a stage is smaller than that.
+
+    The driver heap is 6 GiB: in local mode the driver JVM IS the
+    engine, and the PySpark default is 1 GiB. A 50-query session in
+    1 GiB degrades over time — the r12 re-anchor run (quiet host,
+    external busy-cores ~0 throughout) still showed the session TAIL
+    20-60% slower than r11's tail (knn_sq 0.76→2.06 s, dbscan
+    5.1→7.6 s) purely from heap churn/GC pressure. 6 GiB is a
+    measurement-environment fix, not a tuning win: every timed query
+    still computes from parquet, and a real deployment never runs 32
+    cores against a 1 GiB executor heap.
+    """
+    import glob
 
     from big_data_in_agriculture_spark.session import get_spark
 
-    # Size shuffle partitions to the DATA, not the machine: ~8 MB of
-    # compressed parquet (~64 MB in-memory) per reduce task — the same
-    # rule a 100 TB deployment applies, which at bench scale stops
-    # paying launch overhead for reduce tasks with ~1 MB of input.
-    # Floor keeps local[cpus] parallel on tiny inputs; AQE still
-    # coalesces below the floor when a stage is smaller than that.
-    import glob as _glob
-
     total_bytes = sum(
-        os.path.getsize(f) for f in _glob.glob(os.path.join(sf_dir, "*.parquet"))
+        os.path.getsize(f) for f in glob.glob(os.path.join(sf_dir, "*.parquet"))
     )
-    shuffle_parts = int(max(8, min(2048, total_bytes // (8 << 20))))
-
-    # Size the driver heap like every other harness in the repo
-    # (selfcheck/registry_verify 6g, scale_probe 8g): in local mode the
-    # driver JVM IS the engine, and the PySpark default is 1 GiB. A
-    # 50-query session in 1 GiB degrades over time — the r12 re-anchor
-    # run (quiet host, external busy-cores ~0 throughout) still showed
-    # the session TAIL 20-60% slower than r11's tail (knn_sq 0.76→2.06 s,
-    # dbscan 5.1→7.6 s) purely from heap churn/GC pressure, exactly the
-    # within-session artifact class r10 diagnosed for knn_pq. 6 GiB is
-    # a measurement-environment fix, not a tuning win: every timed
-    # query still computes from parquet, and a real deployment never
-    # runs 32 cores against a 1 GiB executor heap.
     spark = get_spark(
-        "bench",
+        app,
         master=f"local[{cpus}]",
-        shuffle_partitions=shuffle_parts,
+        shuffle_partitions=int(max(8, min(2048, total_bytes // (8 << 20)))),
         extra_conf={"spark.driver.memory": "6g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
+
+def warmup(spark, sf_dir: str) -> None:
+    """Pay every one-time JVM/Python start-up cost outside the timings.
+
+    Per-query timings should reflect steady-state work, which is what a
+    long-lived cluster session runs. Four warmups:
+
+    1. ``tpch_q1``: spins executors + codegen on a small scan;
+    2. a pandas UDF: starts the Python UDF workers (the Arrow-kernel
+       queries — minhash, LSH — otherwise bill ~1.5 s of worker spinup
+       to whichever of them runs first);
+    3. an ARRAY-returning Arrow UDF + posexplode + a local checkpoint:
+       each loads its own JVM classes on first use (~2 s billed to the
+       first minhash-shaped query otherwise);
+    4. a 200-doc corpus through the inverted-index pair expansion: the
+       interpreted array-combinator codegen (transform/slice/flatten
+       over collected structs) JITs on first execution (~2-4x on the
+       first doc-shaped query in a fresh JVM).
+    """
     import __spark_entry__ as entrymod
+    from pyspark.sql.functions import (
+        col, concat_ws, lit, pandas_udf, posexplode, sequence, transform,
+    )
 
-    qs = entrymod.queries()
+    from big_data_in_agriculture_spark.operators.llm import jaccard_pairs
 
-    # Warmup: spin executors + codegen on a small scan outside timing,
-    # and start the Python UDF workers (the Arrow-kernel queries —
-    # minhash, LSH — otherwise bill ~1.5 s of one-time worker spinup
-    # to whichever of them runs first). The second warmup exercises the
-    # ARRAY-returning Arrow path + generate (posexplode) + a local
-    # checkpoint — each loads its own JVM classes on first use
-    # (measured ~2 s billed to the first minhash-shaped query
-    # otherwise; per-query timings should reflect steady-state work,
-    # which is what a long-lived cluster session runs).
-    qs["tpch_q1"](spark, sf_dir).count()
-    from pyspark.sql.functions import col, pandas_udf, posexplode
+    entrymod.queries()["tpch_q1"](spark, sf_dir).count()
 
     @pandas_udf("long")
     def _warm(s: pd.Series) -> pd.Series:
@@ -310,15 +318,6 @@ def main() -> int:
         .localCheckpoint(eager=False)
         .count()
     )
-    # Third warmup: a 200-doc corpus through the inverted-index pair
-    # expansion — the interpreted array-combinator codegen (transform/
-    # slice/flatten over collected structs) JITs on first execution
-    # (~2-4x measured on the first doc-shaped query in a fresh JVM).
-    # Steady-state per-query cost is what extrapolates to a long-lived
-    # cluster session, so the one-time JIT belongs to warmup.
-    from big_data_in_agriculture_spark.operators.llm import jaccard_pairs
-    from pyspark.sql.functions import concat_ws, lit, sequence, transform
-
     tiny = spark.range(200).select(
         col("id").alias("doc_id"),
         concat_ws(
@@ -331,9 +330,30 @@ def main() -> int:
     )
     jaccard_pairs(tiny, threshold=0.5).count()
 
-    # Best of 2 executions per query: single-shot timings at this SF
+
+def main() -> int:
+    sf_dir, cpus = bench_target()
+    try:
+        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    except ValueError:
+        sf = -1.0
+
+    load_gate = _wait_for_quiet_host(
+        max_wait_sec=float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT", "600"))
+    )
+    load_before = _host_load()
+    cpu_calib = _cpu_calibration()
+
+    spark = sf_session("bench", sf_dir, cpus)
+
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    warmup(spark, sf_dir)
+
+    # Best of 3 executions per query: single-shot timings at this SF
     # carry ±20% scheduler/GC noise that would read as cross-round
-    # regressions; the min of two runs is the standard steady-state
+    # regressions; the min of several runs is the standard steady-state
     # estimator (each run still builds the full plan and materializes
     # every output column — nothing is cached between runs).
     runs_per_query = 3
@@ -350,7 +370,7 @@ def main() -> int:
     busy_stamps: dict[str, float] = {}
     gate_waits: dict[str, float] = {}
     for name in HEADLINE:
-        _reclaim(spark)
+        reclaim(spark)
         busy, waited = _wait_for_quiet_query()
         stamps[name] = round(os.getloadavg()[0], 2)
         busy_stamps[name] = round(busy, 2)
@@ -418,7 +438,7 @@ def main() -> int:
     ):
         if name not in qs:
             continue
-        _reclaim(spark)
+        reclaim(spark)
         busy, waited = _wait_for_quiet_query()
         stamps[name] = round(os.getloadavg()[0], 2)
         busy_stamps[name] = round(busy, 2)
@@ -430,7 +450,7 @@ def main() -> int:
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         extended[name] = round(best, 3)
-    _reclaim(spark)
+    reclaim(spark)
     busy, waited = _wait_for_quiet_query()
     stamps["stream_daily_rollup"] = round(os.getloadavg()[0], 2)
     busy_stamps["stream_daily_rollup"] = round(busy, 2)
@@ -540,7 +560,11 @@ def _time_stream(spark, sf_dir: str) -> float:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        try:
+            if not q.awaitTermination(300):
+                raise RuntimeError("stream_daily_rollup did not finish in 300 s")
+        finally:
+            q.stop()
     return _time.perf_counter() - t0
 
 

@@ -1,34 +1,23 @@
 """Dump .explain("formatted") for named queries to plans/<dir>/<query>_<tag>.txt.
 
+Runs in bench.py's sf-sized session, so the plans are the ones it times.
+
 Usage: python scripts/dump_plan.py <outdir> <tag> query [query ...]
 """
 
-import glob
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_target, sf_session  # noqa: E402
+
 
 def main() -> int:
     outdir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    total_bytes = sum(
-        os.path.getsize(f) for f in glob.glob(os.path.join(sf_dir, "*.parquet"))
-    )
-    shuffle_parts = int(max(8, min(2048, total_bytes // (8 << 20))))
-
-    from big_data_in_agriculture_spark.session import get_spark
-
-    spark = get_spark(
-        "plans",
-        master=f"local[{cpus}]",
-        shuffle_partitions=shuffle_parts,
-        extra_conf={"spark.driver.memory": "6g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    sf_dir, cpus = bench_target()
+    spark = sf_session("plans", sf_dir, cpus)
 
     import __spark_entry__ as entrymod
 

@@ -8,7 +8,10 @@
 # Usage:
 #   scripts/precommit.sh                 # registry pins + full sf0.001 sweep
 #   scripts/precommit.sh q1 q2 ...       # registry pins + named queries at
-#                                        # sf0.001 AND sf0.01
+#                                        # sf0.001, then their
+#                                        # REGISTRY_VERIFY.json rows at
+#                                        # sf0.01 (same check; non-zero
+#                                        # exit on any mismatch)
 #
 # Full `pytest tests/ -x -q` (~12 min) is still required before the
 # end-of-round snapshot; this gate is the per-commit floor.
@@ -21,8 +24,6 @@ python -m pytest tests/test_registry.py -x -q
 if [ "$#" -gt 0 ]; then
     echo "== selfcheck (named queries) sf0.001 =="
     python scripts/selfcheck.py /root/testdata/sf0.001 "$@"
-    echo "== selfcheck (named queries) sf0.01 =="
-    python scripts/selfcheck.py /root/testdata/sf0.01 "$@"
     echo "== registry snapshot refresh (named queries) =="
     python scripts/registry_verify.py /root/testdata/sf0.01 "$@"
 else

@@ -1,15 +1,21 @@
-"""Local replica of the driver's correctness gate.
+"""Local replica of the driver's correctness gate, and the one home of
+the oracle side of every in-repo sweep.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB over the same sf tables, then compares row count, sorted
 column names, and an order-insensitive value hash (rows rendered to
 canonical strings, sorted, sha256'd) — the same shape of check the
-driver records in CORRECTNESS_r{N}.json. Queries without an
-``oracle_sql()`` twin but with a ``bounded_oracle()`` spec (the HLL
-sketch queries, whose estimates legitimately differ across engines)
-get a numeric-tolerance check instead: exact counts must match, sketch
-estimates must sit within the published error bound, percentiles
-inside a rank window — reported as PASS(bound)/FAIL(bound).
+driver records in CORRECTNESS_r{N}.json. Queries with a
+``bounded_oracle()`` spec instead of SQL (the HLL sketch queries, whose
+estimates legitimately differ across engines) get a numeric-tolerance
+check: exact counts must match, sketch estimates must sit within the
+published error bound, percentiles inside a rank window — reported as
+PASS(bound)/FAIL(bound).
+
+``scripts/registry_verify.py``, ``scripts/vanilla_check.py`` and
+``tests/test_registry.py`` reuse ``open_duckdb``, ``check_query`` and
+``sweep`` from here. Loading this file has no side effects: perfbench
+and the tests load it by path for ``canon``.
 
 Usage: python scripts/selfcheck.py [sf_dir] [query ...]
 """
@@ -17,12 +23,14 @@ Usage: python scripts/selfcheck.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 import traceback
 
-import duckdb
 import pandas as pd
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def canon(df: pd.DataFrame) -> tuple[int, list[str], str]:
@@ -74,127 +82,169 @@ def check_bounded(sdf: pd.DataFrame, odf: pd.DataFrame, spec: dict) -> list[str]
     return errs
 
 
-def reclaim(spark) -> None:
-    """Drop blocks left behind by the previous query's pins.
+def open_duckdb(sf_dir: str):
+    """DuckDB connection with a view per driver test-harness table."""
+    import duckdb
 
-    Operators pin reused/iterative frames with localCheckpoint or
-    persist; those blocks are freed only when the ContextCleaner sees
-    their RDDs garbage-collected on the driver. A 200+-query sweep in
-    ONE session otherwise accumulates every query's pinned blocks —
-    measured: the full sf0.1 sweep OOM'd mid-run once the round-10
-    rotation moved the iterative graph queries (a dozen eager
-    checkpoints each) ahead of the heavy LLM queries. One Python GC +
-    one JVM GC per query lets the cleaner reclaim everything a real
-    long-lived cluster session would reclaim on its own cadence."""
-    import gc
+    from big_data_in_agriculture_spark.schemas import TESTDATA_TABLES
 
+    con = duckdb.connect()
+    for name in TESTDATA_TABLES:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{name}.parquet')"
+        )
+    return con
+
+
+def oracles() -> dict[str, str | dict]:
+    """Each query's oracle: its ``oracle_sql()`` text or its
+    ``bounded_oracle()`` spec."""
+    import __spark_entry__ as entry
+
+    return {**entry.oracle_sql(), **entry.bounded_oracle()}
+
+
+def _show_mismatch(sdf: pd.DataFrame, odf: pd.DataFrame) -> None:
+    scols, ocols = sorted(sdf.columns), sorted(odf.columns)
+    if scols != ocols or len(sdf) != len(odf):
+        print(f"  columns spark={scols} oracle={ocols}")
+        return
+    s = sdf[scols].sort_values(scols).reset_index(drop=True)
+    o = odf[ocols].sort_values(ocols).reset_index(drop=True)
+    bad = ((s != o) & ~(s.isna() & o.isna())).any(axis=1)
+    print(s[bad].head(3))
+    print(o[bad].head(3))
+
+
+def check_query(spark, con, sf_dir: str, builder, oracle) -> dict:
+    """Run one query on Spark and on its oracle; return the row
+    ``REGISTRY_VERIFY.json`` stores for it.
+
+    ``oracle`` is an ``oracle_sql()`` text (value-hash check) or a
+    ``bounded_oracle()`` spec (tolerance check). A raise on either side
+    becomes an ``error`` row and its traceback is printed.
+    """
     try:
-        spark.catalog.clearCache()
-    except Exception:
-        pass
-    gc.collect()
+        sdf = builder(spark, sf_dir).toPandas()
+    except Exception as exc:  # noqa: BLE001 — recorded, sweep continues
+        traceback.print_exc()
+        return {"kind": "error", "err": f"spark raised: {exc}"}
+    sn, scols, shash = canon(sdf)
+    if isinstance(oracle, dict):
+        try:
+            errs = check_bounded(sdf, con.execute(oracle["sql"]).fetchdf(), oracle)
+        except Exception as exc:  # noqa: BLE001
+            traceback.print_exc()
+            return {"kind": "error", "err": f"bound check raised: {exc}"}
+        return {
+            "kind": "bounded",
+            "spark_rows": sn,
+            "spark_hash": shash,
+            "bounded_pass": not errs,
+            "errs": errs,
+        }
     try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
+        odf = con.execute(oracle).fetchdf()
+    except Exception as exc:  # noqa: BLE001
+        traceback.print_exc()
+        return {"kind": "error", "err": f"oracle raised: {exc}"}
+    on, ocols, ohash = canon(odf)
+    match = (sn, scols, shash) == (on, ocols, ohash)
+    if not match:
+        _show_mismatch(sdf, odf)
+    return {
+        "kind": "oracle",
+        "spark_rows": sn,
+        "oracle_rows": on,
+        "spark_hash": shash,
+        "oracle_hash": ohash,
+        "hash_match": match,
+    }
+
+
+def passed(row: dict) -> bool:
+    return row.get("hash_match", row.get("bounded_pass", False))
+
+
+def _report(name: str, row: dict) -> str:
+    verdict = "PASS" if passed(row) else "FAIL"
+    if row["kind"] == "error":
+        detail = row["err"]
+    elif row["kind"] == "bounded":
+        verdict += "(bound)"
+        detail = "; ".join(row["errs"]) or f"{row['spark_rows']} rows"
+    elif passed(row):
+        detail = f"{row['spark_rows']} rows {row['spark_hash']}"
+    else:
+        detail = (
+            f"spark=({row['spark_rows']},{row['spark_hash']}) "
+            f"oracle=({row['oracle_rows']},{row['oracle_hash']})"
+        )
+    return f"{verdict}  {name}: {detail}"
+
+
+def sweep(spark, sf_dir: str, only: set[str] = frozenset()) -> dict[str, dict]:
+    """Check every registry query (or just ``only``) in registry order,
+    printing one verdict line each; return name -> ``check_query`` row.
+
+    Before each query the previous one's pinned blocks are reclaimed
+    and the session timezone is reset to the one the session started
+    with, so no query can lean on a predecessor's pin.
+    """
+    import __spark_entry__ as entry
+    from bench import reclaim
+
+    twins = oracles()
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    rows: dict[str, dict] = {}
+    with open_duckdb(sf_dir) as con:
+        for name, builder in entry.queries().items():
+            if only and name not in only:
+                continue
+            reclaim(spark)
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            t0 = time.time()
+            rows[name] = row = check_query(spark, con, sf_dir, builder, twins[name])
+            print(f"{_report(name, row)}  ({time.time() - t0:.1f}s)", flush=True)
+    return rows
+
+
+def summary(rows: dict[str, dict]) -> tuple[str, int]:
+    """('N pass, N fail, N bound', number of failures) for sweep rows."""
+    n_fail = sum(not passed(row) for row in rows.values())
+    n_bound = sum(passed(row) for row in rows.values() if row["kind"] == "bounded")
+    n_pass = len(rows) - n_fail - n_bound
+    return f"{n_pass} pass, {n_fail} fail, {n_bound} bound", n_fail
+
+
+def oracle_session(app: str):
+    """The session the oracle sweeps run in.
+
+    6g heap: local mode shares ONE JVM across all task threads —
+    Spark's 1g default dies in spill-read buffers on the heavier
+    queries at sf0.1 (measured: edit_linkage OOM in a fresh 1g
+    session); a real cluster gives each executor core GBs. The driver
+    GATE runs sf0.01 with its own session; this conf only governs the
+    in-repo sweeps.
+    """
+    from big_data_in_agriculture_spark.session import get_spark
+
+    spark = get_spark(
+        app, shuffle_partitions=8, extra_conf={"spark.driver.memory": "6g"}
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    sys.path.insert(0, REPO)
 
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entrymod
-    from big_data_in_agriculture_spark.session import get_spark
-
-    # 6g heap: local[32] shares ONE JVM across all 32 task threads —
-    # Spark's 1g default dies in spill-read buffers on the heavier
-    # queries at sf0.1 (measured: edit_linkage OOM in a fresh 1g
-    # session); a real cluster gives each executor core GBs. The
-    # driver GATE runs sf0.01 with its own session; this conf only
-    # governs the in-repo sweeps.
-    spark = get_spark(
-        "selfcheck", shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "6g"},
-    )
-    con = duckdb.connect()
-    for name in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
-        )
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    bounded = getattr(entrymod, "bounded_oracle", dict)()
-    n_pass = n_fail = n_rowsonly = n_bound = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        reclaim(spark)  # free the previous query's pinned blocks
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception:
-            print(f"FAIL  {name}: spark raised")
-            traceback.print_exc()
-            n_fail += 1
-            continue
-        el = time.time() - t0
-        if name not in oracles:
-            spec = bounded.get(name)
-            if spec is None:
-                print(f"rows-only  {name}: {len(sdf)} rows  ({el:.1f}s)")
-                n_rowsonly += 1
-                continue
-            try:
-                odf = con.execute(spec["sql"]).fetchdf()
-                errs = check_bounded(sdf, odf, spec)
-            except Exception:
-                print(f"FAIL(bound)  {name}: bounded oracle raised")
-                traceback.print_exc()
-                n_fail += 1
-                continue
-            if errs:
-                print(f"FAIL(bound)  {name}: " + "; ".join(errs))
-                n_fail += 1
-            else:
-                print(f"PASS(bound)  {name}: {len(sdf)} rows  ({el:.1f}s)")
-                n_bound += 1
-            continue
-        try:
-            odf = con.execute(oracles[name]).fetchdf()
-        except Exception:
-            print(f"FAIL  {name}: oracle raised")
-            traceback.print_exc()
-            n_fail += 1
-            continue
-        # normalize dtypes the way arrow round-trips do: float32 stays
-        # float32; compare canonical string renderings
-        sn, scols, shash = canon(sdf)
-        on, ocols, ohash = canon(odf)
-        if scols != ocols:
-            print(f"FAIL  {name}: columns spark={scols} oracle={ocols}")
-            n_fail += 1
-        elif sn != on:
-            print(f"FAIL  {name}: rows spark={sn} oracle={on}")
-            n_fail += 1
-        elif shash != ohash:
-            print(f"FAIL  {name}: hash mismatch ({sn} rows)")
-            merged = sdf[sorted(sdf.columns)].sort_values(sorted(sdf.columns)).reset_index(drop=True)
-            omerged = odf[sorted(odf.columns)].sort_values(sorted(odf.columns)).reset_index(drop=True)
-            diff = (merged != omerged) & ~(merged.isna() & omerged.isna())
-            bad = diff.any(axis=1)
-            print(merged[bad].head(3))
-            print(omerged[bad].head(3))
-            n_fail += 1
-        else:
-            print(f"PASS  {name}: {sn} rows  ({el:.1f}s)")
-            n_pass += 1
-    tail = f", {n_bound} bound" if n_bound else ""
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only{tail}")
+    rows = sweep(oracle_session("selfcheck"), sf_dir, only)
+    text, n_fail = summary(rows)
+    print(f"\n{text}")
     return 1 if n_fail else 0
 
 

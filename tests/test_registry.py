@@ -9,20 +9,32 @@ The external driver's correctness gate checks a PREFIX of ``queries()``
 2. The 46 queries the round-3/5/6/7/8/9/10/11 reorderings displaced out
    of the prefix keep full oracle parity here in pytest, so a
    regression in them cannot hide behind the driver's prefix
-   truncation — and scripts/displaced_verify.py snapshots their
-   two-engine hashes into the committed DISPLACED_VERIFY.json for
-   external visibility.
+   truncation; the committed REGISTRY_VERIFY.json
+   (scripts/registry_verify.py) records their two-engine hashes, with
+   every other query's, for external visibility.
+
+The parity checks run through scripts/selfcheck.py's ``check_query``,
+the same routine every oracle sweep uses.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import os
 
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_spec = importlib.util.spec_from_file_location(
+    "_selfcheck", os.path.join(REPO, "scripts", "selfcheck.py")
+)
+selfcheck = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(selfcheck)
 
 #: The driver-gate prefix as of round 11. Rounds 3-4 pinned the
 #: CORRECTNESS_r03 keys; rounds 5, 6 and 7 each DELIBERATELY rotated
@@ -100,8 +112,8 @@ DRIVER_PREFIX_50 = [
 #: swapped in for same-family siblings text_stats / pack_chunks /
 #: crosscorpus_dedup, so genuinely NEW code gets the external gate);
 #: oracle-verified below so they keep an in-repo check despite driver
-#: invisibility, and scripts/displaced_verify.py records their
-#: two-engine hashes in the committed DISPLACED_VERIFY.json artifact.
+#: invisibility, and REGISTRY_VERIFY.json records their two-engine
+#: hashes.
 DISPLACED = [
     "text_stats",
     "pack_chunks",
@@ -166,6 +178,10 @@ DISPLACED = [
     "dbscan_embed",
 ]
 
+#: The HyperLogLog sketch queries: checked against their
+#: ``bounded_oracle()`` tolerance specs instead of a value hash.
+BOUNDED = ["approx_profile_events", "hll_rollup"]
+
 
 #: Doc-drift pins: README.md and COVERAGE.md cite these exact numbers
 #: ("176 of 178 registered queries hash-match ... the remaining 2").
@@ -200,47 +216,37 @@ def test_displaced_queries_stay_registered_with_oracles():
 
 @pytest.fixture(scope="module")
 def _duck():
-    import duckdb
-
     if not os.path.isdir(SF_DIR):
         pytest.skip("driver testdata not present")
-    con = duckdb.connect()
-    for name in (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{name}.parquet')"
-        )
-    return con
+    with selfcheck.open_duckdb(SF_DIR) as con:
+        yield con
 
 
-@pytest.mark.parametrize("name", DISPLACED)
+@pytest.mark.parametrize("name", DISPLACED + BOUNDED)
 def test_displaced_query_oracle_parity(spark, _duck, name):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "_selfcheck", "/root/repo/scripts/selfcheck.py"
+    row = selfcheck.check_query(
+        spark, _duck, SF_DIR, entrymod.queries()[name], selfcheck.oracles()[name]
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    assert selfcheck.passed(row), row
 
-    sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = _duck.execute(entrymod.oracle_sql()[name]).fetchdf()
-    sn, scols, shash = mod.canon(sdf)
-    on, ocols, ohash = mod.canon(odf)
-    assert scols == ocols
-    assert sn == on
-    assert shash == ohash
+
+def test_check_bounded_flags_tolerance_and_missing_keys():
+    spec = {
+        "keys": ["g"],
+        "exact": [("n", "n_exact")],
+        "rel": [("approx", "exact", 0.05)],
+    }
+    odf = pd.DataFrame({"g": ["a", "b"], "n_exact": [10, 20], "exact": [100, 200]})
+    ok = pd.DataFrame({"g": ["a", "b"], "n": [10, 20], "approx": [104, 191]})
+    assert selfcheck.check_bounded(ok, odf, spec) == []
+
+    off = ok.assign(approx=[104, 220])  # b is 10% off, over the 5% bound
+    errs = selfcheck.check_bounded(off, odf, spec)
+    assert len(errs) == 1 and errs[0].startswith("approx off exact by >5%"), errs
+
+    missing = ok[ok["g"] == "a"]
+    errs = selfcheck.check_bounded(missing, odf, spec)
+    assert len(errs) == 1 and errs[0].startswith("key mismatch"), errs
 
 
 def test_bounded_oracle_covers_exactly_the_rows_only_set():
@@ -263,7 +269,7 @@ def test_registry_verify_covers_every_query():
     without regenerating the snapshot fails here."""
     import json
 
-    with open("/root/repo/REGISTRY_VERIFY.json") as f:
+    with open(os.path.join(REPO, "REGISTRY_VERIFY.json")) as f:
         payload = json.load(f)
     rows = payload["queries"]
     qs = entrymod.queries()
